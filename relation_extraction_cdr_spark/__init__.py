@@ -15,6 +15,7 @@ Layout
 - ``scoring``    deterministic batch scorer (pandas-UDF shaped)
 - ``plans``      end-to-end triple-factory pipeline + metrics
 - ``streaming``  incremental / resumable execution (checkpoint lineage)
+- ``refdata``    the one resolver for data shipped with the reference repo
 """
 
 __version__ = "0.1.0"

@@ -663,19 +663,24 @@ def avi_decode(payload: bytes) -> tuple[np.ndarray, float]:
     stream_type = b""  # fccType of the enclosing strl's strh
     frames: list[np.ndarray] = []
 
-    def walk(lo: int, hi: int) -> None:
-        # offset-based walk: no intermediate byte copies — a large
-        # uncompressed AVI would otherwise be duplicated per nesting
-        # level (payload -> LIST body -> movi body -> frame)
-        nonlocal w, h, fps, stream_type
-        p = lo
+    # offset-based walk: no intermediate byte copies — a large
+    # uncompressed AVI would otherwise be duplicated per nesting level
+    # (payload -> LIST body -> movi body -> frame).  Iterative, depth
+    # first: a LIST's children are walked before its later siblings,
+    # whose range waits on an explicit stack, so a hostile chain of
+    # nested LISTs costs heap, not Python frames (RecursionError is
+    # outside the quarantine contract).
+    stack = [(12, len(payload))]
+    while stack:
+        p, hi = stack.pop()
         while p + 8 <= hi:
             fourcc = payload[p : p + 4]
             (ln,) = struct.unpack("<I", payload[p + 4 : p + 8])
             d0, d1 = p + 8, min(p + 8 + ln, hi)
             p += 8 + ln + (ln & 1)
             if fourcc == b"LIST":
-                walk(d0 + 4, d1)
+                stack.append((p, hi))
+                p, hi = d0 + 4, d1
             elif fourcc == b"avih":
                 vals = struct.unpack("<14I", payload[d0 : d0 + 56])
                 w, h = vals[8], vals[9]
@@ -710,7 +715,6 @@ def avi_decode(payload: bytes) -> tuple[np.ndarray, float]:
                 bgr = rows[:, : w * 3].reshape(h, w, 3)
                 frames.append(bgr[::-1, :, ::-1].copy())  # top-down, RGB
 
-    walk(12, len(payload))
     if w is None or not frames:
         raise ValueError("AVI: missing headers or frames")
     return np.stack(frames), fps

@@ -33,8 +33,14 @@ Everything is pure deterministic Python state loaded once per process —
 executors need only this module + the vocab data file (packaged in the
 --py-files zip); no pickle, no broadcast.
 
-Scale note: per-word LRU caches make the cost per token O(1) amortized
-on Zipfian text; the kernel runs inside Arrow-batched UDF stages only.
+Scale note: ``encode`` maps each whitespace word of a cleaned fragment
+straight to its ids through one bounded per-word memo (``_word_ids``),
+so a repeated word costs one lookup and no per-token Python.  The memo
+is exact because steps 1-2 and step 3's cleaning, CJK padding and
+whitespace split run on the whole text first, and what follows — the
+per-word BasicTokenizer body, WordPiece and the id lookup — reads that
+one word and nothing else.  ``tokenize`` keeps the string stream for
+tests and debugging, uncached.
 """
 
 from __future__ import annotations
@@ -42,6 +48,7 @@ from __future__ import annotations
 import functools
 import re
 import unicodedata
+from itertools import chain
 from pathlib import Path
 
 # --- vocab -----------------------------------------------------------------
@@ -160,8 +167,16 @@ def _split_on_token(tok: str, text: str) -> list[str]:
 
 
 def _split_on_added(text: str) -> list[str]:
-    frags = [text]
+    """One split pass per added/special token, in ``_SPLIT_TOKENS`` order.
+    A token absent from the text is skipped: its pass would only rstrip
+    the fragments, which the first pass that splits does as well (the
+    text's trailing whitespace ends up in its last part).  When no token
+    occurs the result is the rstripped text.  Callers pass text with a
+    non-whitespace character (transformers 2.11 guards the same way)."""
+    frags = [text.rstrip()]
     for tok in _SPLIT_TOKENS:
+        if tok not in text:
+            continue
         nxt: list[str] = []
         for frag in frags:
             if frag in _SPLIT_SET:
@@ -232,7 +247,6 @@ def _split_on_punc(token: str) -> list[str]:
     return chunks
 
 
-@functools.lru_cache(maxsize=1 << 17)
 def _basic_word(token: str) -> tuple[str, ...]:
     """BasicTokenizer body for one whitespace token (do_lower_case=True,
     never_split = the special tokens)."""
@@ -255,7 +269,6 @@ def basic_tokenize(text: str) -> list[str]:
 # --- step 4: WordPiece -------------------------------------------------------
 
 
-@functools.lru_cache(maxsize=1 << 17)
 def wordpiece(token: str) -> tuple[str, ...]:
     """Greedy longest-match-first WordPiece of one basic token."""
     if len(token) > _MAX_INPUT_CHARS_PER_WORD:
@@ -309,12 +322,33 @@ def token_to_id(token: str) -> int:
     return VOCAB.get(token, UNK_ID)
 
 
-def convert_tokens_to_ids(tokens: list[str]) -> list[int]:
-    return [token_to_id(t) for t in tokens]
+_SPLIT_IDS = {t: token_to_id(t) for t in _SPLIT_TOKENS}
+
+
+@functools.lru_cache(maxsize=1 << 17)
+def _word_ids(word: str) -> tuple[int, ...]:
+    """Ids of one whitespace word of a cleaned, CJK-padded fragment:
+    BasicTokenizer body, WordPiece and id lookup in one step.  Exact as a
+    memo because both later steps work within one whitespace word and
+    depend on nothing else."""
+    return tuple(token_to_id(p) for t in _basic_word(word) for p in wordpiece(t))
 
 
 def encode(text: str) -> list[int]:
     """``tokenizer.encode(text)``: [CLS] + ids + [SEP] (add_special_tokens
     defaults True in transformers 2.11; the reference relies on it,
-    cdr_dataset.py:124-127)."""
-    return [CLS_ID, *convert_tokens_to_ids(tokenize(text)), SEP_ID]
+    cdr_dataset.py:124-127).  Same steps as ``tokenize`` followed by one
+    ``token_to_id`` per token, but each whitespace word maps straight to
+    its ids through one per-word memo, so no per-token Python runs on a
+    repeated word."""
+    text = _lowercase_text(text)
+    ids = [CLS_ID]
+    if text.strip():
+        for frag in _split_on_added(text):
+            tid = _SPLIT_IDS.get(frag)
+            if tid is not None:
+                ids.append(tid)
+            else:
+                ids.extend(chain.from_iterable(map(_word_ids, _pad_cjk(_clean_text(frag)).split())))
+    ids.append(SEP_ID)
+    return ids

@@ -28,6 +28,15 @@ Decision procedure reproduced exactly (including quirks):
 4. In global mode (extract_inter=False) a pair with no intra evidence gets
    the whole document (text_utils.py:146-147).
 
+Per-pair shape (``select_evidence_py``): each mention position is
+located once per document by bisection over the sentences' span
+segments (``DocIndex``), the pair's mention indices are grouped by
+sentence once, and only sentences holding both a chem and a dis mention
+yield candidates — no per-(chem mention, dis mention) set work.  The
+result equals the reference's loop, tie order and first-occurrence
+offsets included; the exactness conditions are in the function's
+docstring.
+
 Execution shape: ``mapInPandas`` — each input row is self-contained
 (text + both mention position lists), so this is a NARROW stage: no
 shuffle, Arrow batches in/out, sentence splits memoized per document
@@ -37,6 +46,8 @@ join that attached ``text`` to pairs is the only exchange.
 
 from __future__ import annotations
 
+from bisect import bisect_left, bisect_right
+from collections import Counter
 from typing import Iterator
 
 import pandas as pd
@@ -57,33 +68,52 @@ EVIDENCE_SCHEMA = (
 )
 
 
-def _check_position(start: int, sent_start: int, sent: str) -> bool:
-    return sent_start <= start <= sent_start + len(sent) - 1
+def _sentence_cover(sents: list[dict]) -> tuple[list[int], list[list[int]]]:
+    """The sentences' spans cut into elementary segments: the sorted
+    distinct span boundaries, and per segment ``[bounds[k], bounds[k+1])``
+    the idxs of the sentences covering it, in list order.  Spans may
+    overlap or repeat (the first-occurrence ``text.find`` quirk locates a
+    duplicated sentence, or one that also occurs inside an earlier one,
+    at the earlier offset), so a segment can be covered many times."""
+    spans = [(s["start"], s["start"] + len(s["text"]), s["idx"]) for s in sents if s["text"]]
+    bounds = sorted({b for lo, hi, _ in spans for b in (lo, hi)})
+    at = {b: k for k, b in enumerate(bounds)}
+    covers: list[list[int]] = [[] for _ in bounds]
+    for lo, hi, idx in spans:
+        for k in range(at[lo], at[hi]):
+            covers[k].append(idx)
+    return bounds, covers
 
 
-def _token_distance(chem_code: str, chem_start: int, dis_code: str,
-                    dis_start: int, sent: str, sent_start: int) -> int:
-    # earlier entity's END computed with the length of its MESH CODE
-    # (reference quirk, text_utils.py:13-14)
-    if chem_start < dis_start:
-        pos_start, pos_end = chem_start + len(chem_code), dis_start
-    else:
-        pos_start, pos_end = dis_start + len(dis_code), chem_start
-    return len(sent[pos_start - sent_start : pos_end - sent_start].split(" "))
+def _covering(cover: tuple[list[int], list[list[int]]], pos: int) -> list[int]:
+    bounds, covers = cover
+    k = bisect_right(bounds, pos) - 1
+    return covers[k] if k >= 0 else []
 
 
 def build_pos_index(sents: list[dict], positions: list[int]) -> dict[int, list[int]]:
     """pos -> ordered list of sentence idxs whose [start, start+len-1]
     span contains pos (duplicated sentences located at their first
     occurrence can contain the same position more than once — exactly
-    the reference's per-sentence scan)."""
-    out: dict[int, list[int]] = {p: [] for p in positions}
-    for s in sents:
-        lo, hi = s["start"], s["start"] + len(s["text"]) - 1
-        for p in positions:
-            if lo <= p <= hi:
-                out[p].append(s["idx"])
+    the reference's per-sentence scan).  Each position is located by
+    bisection over the sentences' elementary segments; positions in the
+    same segment share one (read-only) list.  A position given n times
+    lists each sentence n times, as the per-sentence scan did."""
+    cover = _sentence_cover(sents)
+    out = {p: _covering(cover, p) for p in positions}
+    if len(out) < len(positions):
+        for p, n in Counter(positions).items():
+            if n > 1:
+                out[p] = [i for i in out[p] for _ in range(n)]
     return out
+
+
+def _sentence(sents: list[dict], i: int) -> dict:
+    # the splitters emit idx == list position; anything else is looked up
+    s = sents[i] if 0 <= i < len(sents) else None
+    if s is None or s["idx"] != i:
+        s = {x["idx"]: x for x in sents}[i]
+    return s
 
 
 def select_evidence_py(
@@ -100,55 +130,68 @@ def select_evidence_py(
     pos_index: dict[int, list[int]] | None = None,
     splitter: str = "regex",
 ) -> dict | None:
-    """Single-pair reference implementation (also the pytest oracle).
+    """Single-pair evidence selection (also the pytest oracle of the
+    distributed operator).
 
     ``pos_index`` (optional): a per-document position->sentence-idx index
-    shared across all pairs of the document — turns the per-pair cost
-    from O(sentences x Mc x Md) into O(Mc x Md).  Candidates are sorted
-    by (sentence idx, chem mention idx, dis mention idx) to reproduce the
-    reference's loop order (ties resolved by first-encountered,
-    text_utils.py:149 list.index(min)).
+    shared across all pairs of the document (``DocIndex.index_for``).
+
+    Shape: the pair's mention indices are grouped by sentence once
+    (O(Mc + Md) lookups), instead of intersecting sentence sets for all
+    Mc x Md mention combinations.  The candidates are then the
+    (sentence, chem mention, dis mention) triples of the sentences both
+    groups share, walked in that order, so the first minimum token
+    distance wins ties exactly like the reference's list.index(min)
+    (text_utils.py:149).  One minimum serves both buckets: it is the
+    intra choice when < 10 and otherwise, every candidate being far, the
+    fallback choice.  A sentence holds a chem mention "alone" iff fewer
+    than all dis mentions are in it (and vice versa), which is the union
+    the reference builds combination by combination; the nearest
+    chem/dis sentence pair is then a bisection per chem sentence, ties
+    to the smaller index as in the reference's nested scan.
+
+    Exact when no sentence idx repeats, neither in ``sents`` nor within
+    one ``pos_index`` list — true for the splitters' output, for
+    ``DocIndex`` and for ``build_pos_index`` over distinct positions.
+    (The reference's sets would collapse a repeat; the groups do not.)
     """
     if sents is None:
         sents = SPLITTERS[splitter](text)
-    by_idx = {s["idx"]: s for s in sents}
     if pos_index is None:
         pos_index = build_pos_index(
             sents,
             sorted({p for p, _ in chem_positions} | {p for p, _ in dis_positions}),
         )
-    intra, intra_d = [], []
-    far, far_d = [], []
-    chem_sent_idx: list[int] = []
-    dis_sent_idx: list[int] = []
-    cands = []  # (sent_idx, cp_idx, dp_idx, ...)
-    for ci, (cs, ce) in enumerate(chem_positions):
-        c_sents = set(pos_index[cs])
-        for di_, (ds, de) in enumerate(dis_positions):
-            d_sents = set(pos_index[ds])
-            for i in c_sents & d_sents:
-                cands.append((i, ci, di_, cs, ce, ds, de))
-            for i in c_sents - d_sents:
-                chem_sent_idx.append(i)
-            for i in d_sents - c_sents:
-                dis_sent_idx.append(i)
-    for i, _ci, _di, cs, ce, ds, de in sorted(cands):
-        s = by_idx[i]
-        sent, sent_start = s["text"], s["start"]
-        td = _token_distance(chem, cs, dis, ds, sent, sent_start)
-        row = dict(
-            sentence=sent, sent_pos=sent_start,
-            chem_start=cs, chem_end=ce, dis_start=ds, dis_end=de,
-        )
-        if td < 10:
-            intra.append(row)
-            intra_d.append(td)
-        else:
-            far.append(row)
-            far_d.append(td)
-    if intra:
-        best = intra[intra_d.index(min(intra_d))]
-        return dict(label=label, evidence_type="intra", **best)
+    chem_by: dict[int, list[int]] = {}
+    for ci, (cs, _ce) in enumerate(chem_positions):
+        for i in pos_index[cs]:
+            chem_by.setdefault(i, []).append(ci)
+    dis_by: dict[int, list[int]] = {}
+    for di, (ds, _de) in enumerate(dis_positions):
+        for i in pos_index[ds]:
+            dis_by.setdefault(i, []).append(di)
+    # (token distance, sentence, chem mention, dis mention) of the first
+    # minimum; the distance is the ' '-split piece count between the
+    # earlier entity's END and the later one's START, where the END is
+    # computed with the length of the MESH CODE (reference quirk,
+    # compute_token_distance, text_utils.py:12-16).  The split count is
+    # taken as count(" ") + 1 over the same slice.
+    best: tuple[int, int, int, int] | None = None
+    for i in sorted(chem_by.keys() & dis_by.keys()):
+        s = _sentence(sents, i)
+        sent, base = s["text"], s["start"]
+        for ci in chem_by[i]:
+            cs = chem_positions[ci][0]
+            for di in dis_by[i]:
+                ds = dis_positions[di][0]
+                if cs < ds:
+                    td = sent.count(" ", cs + len(chem) - base, ds - base) + 1
+                else:
+                    td = sent.count(" ", ds + len(dis) - base, cs - base) + 1
+                if best is None or td < best[0]:
+                    best = (td, i, ci, di)
+    if best is not None and best[0] < 10:
+        return _span_row(label, "intra", sents, best, chem_positions, dis_positions)
     if not extract_inter:
         # document-level fallback (text_utils.py:146-147: the pair is
         # STILL scored over the whole document).  The reference's global
@@ -163,20 +206,26 @@ def select_evidence_py(
             label=label, evidence_type="global", sentence=text, sent_pos=None,
             chem_start=cs, chem_end=ce, dis_start=ds, dis_end=de,
         )
-    if far:
-        best = far[far_d.index(min(far_d))]
-        return dict(label=label, evidence_type="inter_fartoken", **best)
+    if best is not None:
+        return _span_row(label, "inter_fartoken", sents, best, chem_positions, dis_positions)
     # nearest sentence-pair window (text_utils.py:114-143)
-    c_idx = sorted(set(chem_sent_idx))
-    d_idx = sorted(set(dis_sent_idx))
+    n_chem, n_dis = len(chem_positions), len(dis_positions)
+    c_idx = sorted(i for i in chem_by if len(dis_by.get(i, ())) < n_dis)
+    d_idx = sorted(i for i in dis_by if len(chem_by.get(i, ())) < n_chem)
+    if not c_idx or not d_idx:
+        return None
     min_distance, start_sentence, end_sentence = 10000, 0, 0
     for ci in c_idx:
-        for di in d_idx:
-            if abs(ci - di) < min_distance:
-                min_distance = abs(ci - di)
-                start_sentence, end_sentence = min(ci, di), max(ci, di)
-    if min_distance <= 3 and c_idx and d_idx:
-        s0, s1 = by_idx[start_sentence], by_idx[end_sentence]
+        k = bisect_left(d_idx, ci)
+        if k and (k == len(d_idx) or ci - d_idx[k - 1] <= d_idx[k] - ci):
+            di = d_idx[k - 1]
+        else:
+            di = d_idx[k]
+        if abs(ci - di) < min_distance:
+            min_distance = abs(ci - di)
+            start_sentence, end_sentence = min(ci, di), max(ci, di)
+    if min_distance <= 3:
+        s0, s1 = _sentence(sents, start_sentence), _sentence(sents, end_sentence)
         # the splitter contract stores start = text.find(sent) on every
         # sentence dict (functions/text.py:82), so reuse it instead of
         # re-scanning the document up to three times per pair
@@ -201,22 +250,46 @@ def select_evidence_py(
     return None
 
 
+def _span_row(
+    label: int,
+    kind: str,
+    sents: list[dict],
+    best: tuple[int, int, int, int],
+    chem_positions: list[tuple[int, int]],
+    dis_positions: list[tuple[int, int]],
+) -> dict:
+    """The evidence row of the winning (distance, sentence, chem, dis)."""
+    _td, i, ci, di = best
+    s = _sentence(sents, i)
+    cs, ce = chem_positions[ci]
+    ds, de = dis_positions[di]
+    return dict(
+        label=label, evidence_type=kind, sentence=s["text"], sent_pos=s["start"],
+        chem_start=cs, chem_end=ce, dis_start=ds, dis_end=de,
+    )
+
+
 class DocIndex:
     """Per-document shared state for evidence selection inside a UDF
     batch: the sentence list plus a lazily-grown position->sentences
     index (each distinct mention position is located once per document,
-    not once per pair)."""
+    not once per pair, against segments cut once per document on the
+    first lookup)."""
 
-    __slots__ = ("sents", "idx")
+    __slots__ = ("sents", "idx", "_cover")
 
     def __init__(self, text: str, splitter: str = "regex"):
         self.sents = SPLITTERS[splitter](text)
         self.idx: dict[int, list[int]] = {}
+        self._cover: tuple[list[int], list[list[int]]] | None = None
 
     def index_for(self, positions: list[int]) -> dict[int, list[int]]:
-        missing = [p for p in positions if p not in self.idx]
+        missing = set(positions).difference(self.idx)
         if missing:
-            self.idx.update(build_pos_index(self.sents, missing))
+            if self._cover is None:
+                self._cover = _sentence_cover(self.sents)
+            for p in missing:
+                self.idx[p] = _covering(self._cover, p)
         return self.idx
 
 

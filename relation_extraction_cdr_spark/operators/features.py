@@ -14,8 +14,20 @@ Reference semantics (cdr_dataset.py:294-376, make_example_non_global):
   (cdr_dataset.py:328-353); with use_entity_token=False the marker ids
   are stripped from the token list (P8, cdr_dataset.py:357-358).
 - label encoding: sklearn LabelEncoder == dense codes over the
-  LEXICOGRAPHICALLY SORTED distinct mask values (cdr_dataset.py:363-367);
-  reproduced with numpy unique (which sorts) — per-row, no shuffle.
+  LEXICOGRAPHICALLY SORTED distinct mask values (cdr_dataset.py:363-367)
+  — per-row, no shuffle.
+- a row whose marked text tokenizes to marker ids other than the
+  inserted pairs is DROPPED (engine guard, not in the reference): page
+  text is lowercased, so a literal ``[E]``/``[e]``/``[/e]`` becomes the
+  added marker token and would otherwise misalign the mask with the ids.
+
+Shape: the mask is never walked token by token.  The inserted markers
+are located with ``list.index`` (C scans); because the guard above
+leaves exactly the inserted pairs, in order, the mask is a handful of
+runs — 'O', the first code, 'O', the second code, 'O' — and its label
+encoding is the sorted set of the (at most three) values those runs
+carry.  Both are equal to the reference's per-token loop and
+``np.unique`` over the mask strings whenever the guard passes.
 
 Execution: one ``mapInPandas`` over evidence rows — narrow stage, Arrow
 batches; all heavy string surgery is per-row Python on short evidence
@@ -39,6 +51,67 @@ FEATURES_SCHEMA = (
 )
 
 
+def _marker_pairs(ids: list[int], n: int) -> list[tuple[int, int]] | None:
+    """Token positions ``(start, end)`` of the ``n`` inserted
+    ``[e]`` ... ``[/e]`` pairs, or None unless the marker ids in ``ids``
+    are exactly ``n`` pairs in alternating order.  Any other marker
+    sequence means the text carried a literal ``[e]``/``[/e]`` (the page
+    text is lowercased, so ``[E]`` counts too) or overlapping spans cut
+    or nested an inserted marker; such rows are dropped."""
+    if ids.count(E_START_ID) != n or ids.count(E_END_ID) != n:
+        return None
+    pairs = []
+    e = 0
+    for _ in range(n):
+        try:
+            s = ids.index(E_START_ID, e)
+            e = ids.index(E_END_ID, s)
+        except ValueError:
+            return None
+        pairs.append((s, e))
+    return pairs
+
+
+def _label_encoded_mask(
+    n_tokens: int,
+    pairs: list[tuple[int, int]],
+    codes,
+    use_entity_token: bool,
+) -> tuple[list[int], dict[str, int]]:
+    """The entity mask over ``n_tokens`` ids with the given marker pairs:
+    'O' outside the pairs, the pair's code inside (its two markers
+    included iff ``use_entity_token``; without them the markers are
+    stripped from the ids, so they get no mask entry either), encoded
+    like sklearn's LabelEncoder — dense codes over the lexicographically
+    sorted distinct values present.  Built as runs of equal values: at
+    most three distinct values per pair row, no per-token loop."""
+    edge = 0 if use_entity_token else 1
+    runs: list[tuple[str, int]] = []
+    prev = 0
+    for (s, e), code in zip(pairs, codes):
+        runs.append(("O", s - prev))
+        runs.append((code, e - s + 1 - 2 * edge))
+        prev = e + 1
+    runs.append(("O", n_tokens - prev))
+    lookup = {c: j for j, c in enumerate(sorted({v for v, k in runs if k}))}
+    mask: list[int] = []
+    for v, k in runs:
+        if k:
+            mask += [lookup[v]] * k
+    return mask, lookup
+
+
+def _strip_markers(ids: list[int], pairs: list[tuple[int, int]]) -> list[int]:
+    out: list[int] = []
+    prev = 0
+    for s, e in pairs:
+        out += ids[prev:s]
+        out += ids[s + 1 : e]
+        prev = e + 1
+    out += ids[prev:]
+    return out
+
+
 def featurize_py(
     sentence: str,
     sent_pos: int,
@@ -51,7 +124,13 @@ def featurize_py(
     use_entity_token: bool = True,
     max_len: int = 512,
 ) -> dict | None:
-    """Single-row reference implementation (pytest oracle)."""
+    """Single-row featurization (also the pytest oracle of ``featurize``).
+
+    Returns token_ids / entity_mask / chem_code / dis_code, or None when
+    the marked text exceeds ``max_len`` ids, when it carries marker ids
+    other than the two inserted pairs (a literal ``[e]``/``[/e]`` in the
+    evidence, or overlapping spans that cut or nest a marker), or when an
+    entity's region is empty so its code never reaches the mask."""
     cs, ce = chem_start - sent_pos, chem_end - sent_pos
     ds, de = dis_start - sent_pos, dis_end - sent_pos
     if cs > ds:
@@ -65,41 +144,23 @@ def featurize_py(
     ids = encode(t)
     if len(ids) > max_len:
         return None
-    mask: list[str] = []
-    i = 0
-    ent = 0
-    while i < len(ids):
-        if ids[i] != E_START_ID:
-            mask.append("O")
-            i += 1
-        else:
-            code = first if ent == 0 else second
-            if use_entity_token:
-                mask.append(code)
-            i += 1
-            while i < len(ids) and ids[i] != E_END_ID:
-                mask.append(code)
-                i += 1
-            if use_entity_token:
-                mask.append(code)
-            ent += 1
-            i += 1
-    if not use_entity_token:
-        ids = [x for x in ids if x not in (E_START_ID, E_END_ID)]
-    # LabelEncoder: dense rank over lexicographically sorted classes
-    classes, enc = np.unique(np.array(mask, dtype=object), return_inverse=True)
-    lookup = {c: j for j, c in enumerate(classes)}
+    pairs = _marker_pairs(ids, 2)
+    if pairs is None:
+        return None
+    mask, lookup = _label_encoded_mask(len(ids), pairs, (first, second), use_entity_token)
     if chem_mesh not in lookup or dis_mesh not in lookup:
         # pathological offsets (e.g. a find()-failure span from the
-        # reproduced inter_window quirk) can corrupt a marker so an
-        # entity never lands in the mask — drop the row like the other
-        # guards do, never KeyError inside the executor task
+        # reproduced inter_window quirk) can leave an entity's region
+        # empty so it never lands in the mask — drop the row like the
+        # other guards do, never KeyError inside the executor task
         return None
+    if not use_entity_token:
+        ids = _strip_markers(ids, pairs)
     return dict(
         token_ids=ids,
-        entity_mask=[int(x) for x in enc],
-        chem_code=int(lookup[chem_mesh]),
-        dis_code=int(lookup[dis_mesh]),
+        entity_mask=mask,
+        chem_code=lookup[chem_mesh],
+        dis_code=lookup[dis_mesh],
     )
 
 
@@ -136,6 +197,10 @@ def fulltext_featurize_py(
       dis-inner cross order, 1 iff the pair is in ``gold_pairs``
     - LabelEncoder over the mask strings (dense rank of sorted distinct
       values) re-encodes mask + both code lists (cdr_dataset.py:533-535)
+    - a document whose marked text tokenizes to marker ids other than one
+      alternating pair per inserted mention is dropped (a literal
+      ``[e]``/``[/e]`` in the page, or overlapping mention spans), like
+      ``featurize_py``; the mask is then built from the pair positions
 
     Returns token_ids / entity_mask / encoded code lists / labels plus
     the mesh-id lists in pair order (so logits can be joined back).
@@ -154,37 +219,20 @@ def fulltext_featurize_py(
         s, e_ = p["start"], p["end"]
         t = t[:s] + " [E] " + t[s:e_] + " [/E] " + t[e_:]
     ids = encode(t)
+    pairs = _marker_pairs(ids, len(entities_pos))
+    if pairs is None:
+        return None
     if len(ids) > max_len:
-        subset = ids[:max_len]
-        last_end = -1
-        for i, x in enumerate(subset):
-            if x == E_END_ID:
-                last_end = i
-        if last_end < 0:
+        # the window's last [/e] closes the last pair ending inside it
+        pairs = [(s, e) for s, e in pairs if e < max_len]
+        if not pairs:
             return None
-        ids = subset[: last_end + 1]
-    mask: list[str] = []
-    i = 0
-    span = 0
-    while i < len(ids):
-        if ids[i] != E_START_ID:
-            mask.append("O")
-            i += 1
-        else:
-            code = entities_pos[span]["code"]
-            if use_entity_token:
-                mask.append(code)
-            i += 1
-            while i < len(ids) and ids[i] != E_END_ID:
-                mask.append(code)
-                i += 1
-            if use_entity_token:
-                mask.append(code)
-            span += 1
-            i += 1
+        ids = ids[: pairs[-1][1] + 1]
+    mask, lookup = _label_encoded_mask(
+        len(ids), pairs, [p["code"] for p in entities_pos], use_entity_token
+    )
     if not use_entity_token:
-        ids = [x for x in ids if x not in (E_START_ID, E_END_ID)]
-    present = set(mask)
+        ids = _strip_markers(ids, pairs)
     # one entity per mesh_id (the reference inventory is a dict keyed by
     # mesh_id, so duplicates cannot exist there; caller-supplied entity
     # lists CAN repeat an id — last type wins, like the dict overwrite —
@@ -203,22 +251,20 @@ def fulltext_featurize_py(
     dis_meshes: list[str] = []
     labels: list[int] = []
     for c in chem_all:
-        if c in present:
+        if c in lookup:
             chem_meshes.append(c)
             for d in dis_all:
-                if d in present:
+                if d in lookup:
                     if d not in dis_meshes:
                         dis_meshes.append(d)
                     labels.append(1 if (c, d) in gold else 0)
     if not chem_meshes or not dis_meshes:
         return None
-    classes, enc = np.unique(np.array(mask, dtype=object), return_inverse=True)
-    lookup = {c: j for j, c in enumerate(classes)}
     return dict(
-        token_ids=[int(x) for x in ids],
-        entity_mask=[int(x) for x in enc],
-        chem_codes=[int(lookup[c]) for c in chem_meshes],
-        dis_codes=[int(lookup[d]) for d in dis_meshes],
+        token_ids=ids,
+        entity_mask=mask,
+        chem_codes=[lookup[c] for c in chem_meshes],
+        dis_codes=[lookup[d] for d in dis_meshes],
         labels=labels,
         chem_meshes=chem_meshes,
         dis_meshes=dis_meshes,

@@ -49,6 +49,7 @@ from ..functions import quality as Q
 from ..functions.text import BPEISH_PATTERN
 from ..operators import ann as ANN
 from ..operators import dedup as DD
+from ..refdata import MESH_TREE, reference_path, require_reference
 from ..session import load_tables
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -3939,8 +3940,8 @@ def q81(spark, sf_dir):
 
 # the real 57,840-row MeSH hierarchy (reference data_loaders/2017MeshTree.txt,
 # loaded by cdr_dataset.py:22-34) — public data shipped with the reference,
-# already exercised by tests/test_mesh_real.py
-_MESH_TSV = "/root/reference/data_loaders/2017MeshTree.txt"
+# already exercised by tests/test_mesh_real.py; located through refdata
+_MESH_TSV = str(reference_path(MESH_TREE))
 
 
 @register(
@@ -3985,7 +3986,7 @@ def q82(spark, sf_dir):
     this table is built once and broadcast to every hypernym join."""
     from ..sources.mesh import read_mesh_tree
 
-    mesh = read_mesh_tree(spark, _MESH_TSV).select(
+    mesh = read_mesh_tree(spark, str(require_reference(MESH_TREE))).select(
         F.col("tree_number").alias("tn"), "mesh_id"
     )
     parts = F.split(F.col("tn"), "\\.")

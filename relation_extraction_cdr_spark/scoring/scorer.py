@@ -660,11 +660,3 @@ def _encode_doc(token_ids: np.ndarray) -> np.ndarray:
     h = np.tanh(h @ w["w2"])
     return h
 
-
-def _pair_logit(hidden: np.ndarray, mask: np.ndarray, chem_code: int, dis_code: int) -> float:
-    """Mean-pooled span reps (A3/M3) -> dot-product pair head (M2)."""
-    c = hidden[mask == chem_code]
-    d = hidden[mask == dis_code]
-    if len(c) == 0 or len(d) == 0:
-        return 0.0
-    return float(np.dot(c.mean(axis=0), d.mean(axis=0)))

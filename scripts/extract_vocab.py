@@ -25,13 +25,13 @@ import pickle
 import sys
 from pathlib import Path
 
-DEFAULT_PKL = "/root/reference/models_saved/electra_small_tokenizer.pkl"
-DEFAULT_OUT = (
-    Path(__file__).resolve().parent.parent
-    / "relation_extraction_cdr_spark"
-    / "data"
-    / "electra_vocab.txt"
-)
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
+
+from relation_extraction_cdr_spark.refdata import reference_path  # noqa: E402
+
+DEFAULT_PKL = str(reference_path("models_saved/electra_small_tokenizer.pkl"))
+DEFAULT_OUT = REPO / "relation_extraction_cdr_spark" / "data" / "electra_vocab.txt"
 
 
 class _Stub:

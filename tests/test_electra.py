@@ -8,6 +8,7 @@ import numpy as np
 import pytest
 
 from relation_extraction_cdr_spark.functions.wordpiece import encode
+from relation_extraction_cdr_spark.refdata import absent_reason, reference_path
 from relation_extraction_cdr_spark.scoring import electra as E
 from tests.reference_ports import electra_port as P
 
@@ -21,10 +22,12 @@ CONSISTENT = E.ElectraConfig(
 )
 
 
+_CONFIG_JSON = "models_saved/Electra_converted_pytorch/config.json"
+
+
+@pytest.mark.skipif(absent_reason(_CONFIG_JSON) is not None, reason=str(absent_reason(_CONFIG_JSON)))
 def test_config_from_shipped_json():
-    cfg = E.ElectraConfig.from_json(
-        "/root/reference/models_saved/Electra_converted_pytorch/config.json"
-    )
+    cfg = E.ElectraConfig.from_json(str(reference_path(_CONFIG_JSON)))
     assert (cfg.embedding_size, cfg.hidden_size) == (128, 256)
     assert (cfg.num_hidden_layers, cfg.num_attention_heads) == (12, 4)
     assert cfg.intermediate_size == 1024 and cfg.max_position_embeddings == 512
@@ -477,16 +480,14 @@ import re as _re  # noqa: E402
 import pytest as _pytest  # noqa: E402
 
 
-@_pytest.mark.skipif(
-    not _os.path.isdir("/root/reference"), reason="reference tree absent"
-)
+@_pytest.mark.skipif(absent_reason() is not None, reason=str(absent_reason()))
 def test_cls_pool_dead_in_reference():
     """Mechanical pin of the dead-code reading (the J9-style pin):
     ElectraModelSentenceClassification is IMPORTED by the trainers but
     never CONSTRUCTED anywhere in the reference — neither a direct call
     nor a from_pretrained on the class."""
     uses = []
-    for root, _dirs, files in _os.walk("/root/reference"):
+    for root, _dirs, files in _os.walk(reference_path()):
         for fname in files:
             if not fname.endswith(".py"):
                 continue

@@ -1,8 +1,12 @@
-"""Fused scoring path must equal the modular three-stage path exactly."""
+"""Fused scoring path must equal the modular three-stage path exactly, and
+survive pages whose text carries the marker token."""
 
 from __future__ import annotations
 
+import pytest
+
 from relation_extraction_cdr_spark.plans.pipeline import score_candidates
+from relation_extraction_cdr_spark.scoring.scorer import fused_score_docs
 
 
 def _rows(df):
@@ -18,3 +22,41 @@ def test_fused_equals_modular(spark, fixtures, mesh):
     fused = score_candidates(pages, mesh, gold=gold, fused=True)
     modular = score_candidates(pages, mesh, gold=gold, fused=False)
     assert _rows(fused) == _rows(modular)
+
+
+
+_GAZ = {"lithium": [("D910001", "Chemical")], "tremor": [("D010001", "Disease")],
+        "seizures": [("D010002", "Disease")]}
+_PAYLOAD = "url string, text string, gold_pairs array<struct<chem_mesh:string,dis_mesh:string>>"
+
+
+def _score(spark, rows, backend):
+    df = spark.createDataFrame(rows, _PAYLOAD).coalesce(1)  # one Arrow batch
+    out = fused_score_docs(df, gazetteer=_GAZ, max_term_words=1, backend=backend)
+    return sorted(tuple(r) for r in out.collect())
+
+
+@pytest.mark.parametrize("backend", ["stub", "electra"])
+def test_literal_marker_page_does_not_kill_the_batch(spark, backend):
+    """extract_text lowercases '[E]' to the added '[e]' marker token.  A
+    pair whose evidence carries one is dropped; the rest of the Arrow
+    batch scores exactly as it does without the poisoned pages."""
+    healthy = [
+        ("u/ok", "lithium induced tremor in rats.", None),
+        ("u/apart", "lithium induced seizures in rats. see [e] and [/e] here.", None),
+    ]
+    poisoned = [
+        ("u/intra", "lithium induced tremor in rats, see [e] here.", None),
+        ("u/many", "[/e] lithium induced [E] tremor [e] [e].", None),
+    ]
+    got = _score(spark, healthy + poisoned, backend)
+    assert got == _score(spark, healthy, backend)
+    assert [r[0] for r in got] == ["u/apart", "u/ok"]
+    if backend == "electra":
+        # u/apart's evidence sentence is clean but its page is not: the
+        # document featurization drops it, so no encoder margin reaches
+        # its probability (the stub score), while u/ok's does
+        stub = {r[0]: r[6] for r in _score(spark, healthy, "stub")}
+        prob = {r[0]: r[6] for r in got}
+        assert prob["u/apart"] == stub["u/apart"]
+        assert prob["u/ok"] != stub["u/ok"]

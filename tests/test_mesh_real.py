@@ -7,23 +7,21 @@ join on genuine multi-word medical terms."""
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 import pytest
 
 from relation_extraction_cdr_spark.operators.mentions import detect_mentions
+from relation_extraction_cdr_spark.refdata import MESH_TREE, absent_reason, reference_path
 from relation_extraction_cdr_spark.sources.mesh import (
     gazetteer,
     read_mesh_tree,
     tree_multimap,
 )
 
-MESH_PATH = "/root/reference/data_loaders/2017MeshTree.txt"
+MESH_PATH = str(reference_path(MESH_TREE))
+_ABSENT = absent_reason(MESH_TREE)
 
-pytestmark = pytest.mark.skipif(
-    not os.path.exists(MESH_PATH), reason="reference data not present"
-)
+pytestmark = pytest.mark.skipif(_ABSENT is not None, reason=str(_ABSENT))
 
 
 @pytest.fixture(scope="module")

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import struct
+
 import pytest
 
 from relation_extraction_cdr_spark.operators import multimodal as MM
@@ -170,13 +172,15 @@ def test_unidentified_image_falls_to_fake_with_accel_present(monkeypatch):
     the no-Pillow run.  Identified-but-corrupt images quarantine."""
     import numpy as np
 
-    class UnidentifiedImageError(Exception):
+    class _Unidentified(Exception):
         pass
 
     class _StubPIL:
+        UnidentifiedImageError = _Unidentified  # as PIL.Image re-exports it
+
         @staticmethod
         def open(fp):
-            raise UnidentifiedImageError("cannot identify image file")
+            raise _Unidentified("cannot identify image file")
 
     payload = b"blob42:deadbeefdeadbeefdeadbeef"
     monkeypatch.setattr(MM, "accel_image", lambda: None)
@@ -186,6 +190,8 @@ def test_unidentified_image_falls_to_fake_with_accel_present(monkeypatch):
     assert np.array_equal(without, with_accel)
 
     class _CorruptPIL:
+        UnidentifiedImageError = _Unidentified
+
         @staticmethod
         def open(fp):
             raise OSError("broken data stream when reading image file")
@@ -193,6 +199,37 @@ def test_unidentified_image_falls_to_fake_with_accel_present(monkeypatch):
     monkeypatch.setattr(MM, "accel_image", lambda: _CorruptPIL)
     with pytest.raises(ValueError, match="accel image decode failed"):
         MM._decode(payload, "image")
+
+
+def _nested_avi(avi: bytes, depth: int) -> bytes:
+    """``avi``'s top-level chunks wrapped in ``depth`` nested LIST
+    chunks (12 bytes each), inside a valid RIFF/AVI header."""
+    body = avi[12:]
+    heads = [
+        b"LIST" + struct.pack("<I", 4 + 12 * (depth - 1 - k) + len(body)) + b"rec "
+        for k in range(depth)
+    ]
+    inner = b"".join(heads) + body
+    return b"RIFF" + struct.pack("<I", 4 + len(inner)) + b"AVI " + inner
+
+
+def test_avi_deeply_nested_lists_stay_in_contract():
+    """A ~30 KB chain of nested LIST chunks used to recurse once per
+    level and raise RecursionError, outside DECODE_ERROR_TYPES.  The walk
+    is iterative: an empty chain is a plain ValueError, and frames
+    below the chain decode like the flat file's."""
+    import numpy as np
+
+    from relation_extraction_cdr_spark.functions.codecs import avi_decode, avi_encode
+
+    with pytest.raises(ValueError, match="missing headers or frames"):
+        avi_decode(_nested_avi(b"RIFF\0\0\0\0AVI ", 2500))
+    frames = np.arange(2 * 4 * 6 * 3, dtype=np.uint8).reshape(2, 4, 6, 3)
+    flat = avi_encode(frames, fps=5)
+    got, fps = avi_decode(_nested_avi(flat, 2500))
+    want, want_fps = avi_decode(flat)
+    assert np.array_equal(got, want) and np.array_equal(got, frames)
+    assert fps == want_fps == 5
 
 
 def test_codec_fuzz_respects_quarantine_contract():
@@ -253,6 +290,14 @@ def test_codec_fuzz_respects_quarantine_contract():
         "wav_f32": (
             wav_encode(rng.standard_normal(150).astype(np.float32), 8000),
             "audio",
+        ),
+        # a real AVI whose chunks sit below 1200 nested LISTs
+        "avi_nested": (
+            _nested_avi(
+                avi_encode(rng.integers(0, 256, (2, 4, 4, 3)).astype(np.uint8), fps=5),
+                1200,
+            ),
+            "video",
         ),
     }
     n_run = 0

@@ -15,13 +15,23 @@ from relation_extraction_cdr_spark.plans.audit import (
     unrounded_decimal_quotients,
 )
 from relation_extraction_cdr_spark.plans.queries import QUERIES
+from relation_extraction_cdr_spark.refdata import ReferenceDataAbsent
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
+def _plan(spark, name):
+    """The query's DataFrame, or a skip when it reads reference data
+    that is not present (q82's real MeSH tree)."""
+    try:
+        return QUERIES[name](spark, SF_DIR)
+    except ReferenceDataAbsent as e:
+        pytest.skip(str(e))
+
+
 @pytest.mark.parametrize("name", sorted(EXPECTATIONS))
 def test_audited_plan(spark, name):
-    violations = audit_query(name, QUERIES[name](spark, SF_DIR))
+    violations = audit_query(name, _plan(spark, name))
     assert not violations, "; ".join(violations)
 
 
@@ -33,16 +43,24 @@ def test_global_plan_invariants(spark):
        hash killer that made q66/q67/q74/q75 red in round 3 — Spark
        rounds decimal division HALF_UP, DuckDB mediates through DOUBLE;
        outputs must be exact scaled integers or rounded quotients).
+
+    A query whose reference data is absent is left out; every other plan
+    is still audited.
     """
-    cartesian, raw_quot = {}, {}
+    cartesian, raw_quot, absent = {}, {}, []
     for name, fn in QUERIES.items():
-        df = fn(spark, SF_DIR)
+        try:
+            df = fn(spark, SF_DIR)
+        except ReferenceDataAbsent:
+            absent.append(name)
+            continue
         facts = plan_facts(df)
         if facts.cartesian_products:
             cartesian[name] = facts.cartesian_products
         quot = unrounded_decimal_quotients(df)
         if quot:
             raw_quot[name] = quot
+    assert set(absent) <= {"q82_mesh_closure"}, f"unexpected reference-data queries: {absent}"
     assert not cartesian, f"cartesian products in: {cartesian}"
     assert not raw_quot, f"raw decimal quotients in: {raw_quot}"
 

@@ -1,5 +1,6 @@
 """Golden-input parity: parse the REAL PubTator files the reference
-ships (`/root/reference/data/alps/alps_{train,test}.txt` — the only data
+ships (`data/alps/alps_{train,test}.txt` under the reference root, see
+`relation_extraction_cdr_spark/refdata.py` — the only data
 present in the repo) with our distributed reader and cross-check every
 table against an independent plain-Python parse implementing the
 documented reference semantics (cdr_dataset.py:37-83: block split on
@@ -14,17 +15,15 @@ entities, multi-relation documents.
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
+from relation_extraction_cdr_spark.refdata import absent_reason, reference_path
 from relation_extraction_cdr_spark.sources import pubtator as PT
 
-ALPS_DIR = "/root/reference/data/alps"
+ALPS_DIR = str(reference_path("data/alps"))
+_ABSENT = absent_reason("data/alps")
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(ALPS_DIR), reason="reference data not present"
-)
+pytestmark = pytest.mark.skipif(_ABSENT is not None, reason=str(_ABSENT))
 
 
 def _py_parse(path: str):

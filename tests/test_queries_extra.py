@@ -4,7 +4,10 @@ from __future__ import annotations
 
 import math
 
+import pytest
+
 from relation_extraction_cdr_spark.plans.queries import QUERIES
+from relation_extraction_cdr_spark.refdata import MESH_TREE, absent_reason, reference_path
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -152,6 +155,7 @@ def test_triple_diff_matches_per_snapshot_recompute(spark):
     assert got == expect and got
 
 
+@pytest.mark.skipif(absent_reason(MESH_TREE) is not None, reason=str(absent_reason(MESH_TREE)))
 def test_mesh_closure_against_python_recompute(spark):
     """q82 over the real 57,840-row MeSH tree: structural invariants on
     the full output plus an exact recompute of the ancestor closure for
@@ -162,7 +166,7 @@ def test_mesh_closure_against_python_recompute(spark):
 
     trees: dict = {}
     owner: dict = {}
-    with open("/root/reference/data_loaders/2017MeshTree.txt") as fh:
+    with open(reference_path(MESH_TREE)) as fh:
         next(fh)
         for line in fh:
             tn, mid, _term = line.rstrip("\n").split("\t", 2)

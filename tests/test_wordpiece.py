@@ -24,9 +24,12 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from relation_extraction_cdr_spark.functions import wordpiece as W
+from relation_extraction_cdr_spark.refdata import absent_reason, reference_path
+from tests.reference_ports import text_path_port as OLD
 from tests.reference_ports import tokenizer_port as P
 
-ALPS_DIR = "/root/reference/data/alps"
+ALPS_DIR = str(reference_path("data/alps"))
+_ALPS_ABSENT = absent_reason("data/alps")
 
 
 def test_known_ids():
@@ -115,7 +118,31 @@ def test_hypothesis_marker_parity(chunks):
     assert W.encode(text) == P.encode(text)
 
 
-@pytest.mark.skipif(not os.path.isdir(ALPS_DIR), reason="reference data not present")
+# the per-word memo (encode) against the frozen string-stream pipeline:
+# NBSP / Zs spaces, control and zero-width chars, accents, 'İ' (lower()
+# lengthens it), final sigma, CJK, literal specials and markers glued to
+# words, 100+-char words
+ENCODE_CHUNKS = st.one_of(
+    st.text(alphabet="abcdefghij İıΣσςé\u0301漢字テ.,-[]/\u00a0\u2003\u200b\x07\x00\t\n", max_size=12),
+    st.sampled_from(["[E]", "[/E]", "[e]", "[/e]", "[UNK]", "[unk]", "[MASK]", "[SEP]",
+                     " [E] ", "x[e]y", "İstanbul", "a" * 101, "   ", ""]),
+)
+
+
+@settings(max_examples=400, deadline=None)
+@given(st.lists(ENCODE_CHUNKS, max_size=10))
+def test_encode_equals_frozen_pipeline(chunks):
+    text = "".join(chunks)
+    assert W.encode(text) == OLD.encode(text)
+    assert W.encode(text) == P.encode(text)
+
+
+@pytest.mark.parametrize("text", ADVERSARIAL)
+def test_adversarial_encode_equals_frozen_pipeline(text):
+    assert W.encode(text) == OLD.encode(text)
+
+
+@pytest.mark.skipif(_ALPS_ABSENT is not None, reason=str(_ALPS_ABSENT))
 @pytest.mark.parametrize("fname", ["alps_test.txt", "alps_train.txt"])
 def test_real_alps_corpus_parity(fname):
     """Token-id-sequence equality on every abstract line of the shipped
@@ -131,7 +158,7 @@ def test_real_alps_corpus_parity(fname):
     assert n > 0
 
 
-@pytest.mark.skipif(not os.path.isdir(ALPS_DIR), reason="reference data not present")
+@pytest.mark.skipif(_ALPS_ABSENT is not None, reason=str(_ALPS_ABSENT))
 def test_real_alps_marked_featurization_parity():
     """The featurization surface: insert ' [E] '/' [/E] ' markers around
     real mention spans (reference cdr_dataset.py:117-122 reverse-order
