@@ -43,6 +43,7 @@ PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 
 _COLOR_TYPE = {1: 0, 2: 4, 3: 2, 4: 6}  # channels -> PNG color type
 _CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}  # color type -> channels
+_TRNS_LEN = {0: 2, 2: 6}  # grey/RGB tRNS: one 16-bit sample per channel
 
 # Adam7 interlace passes: (x0, y0, dx, dy) per PNG spec 8.2
 _ADAM7 = (
@@ -280,7 +281,7 @@ def png_decode(payload: bytes) -> np.ndarray:
     filter type.  Palette output is uint8 RGB, or RGBA when tRNS is
     present; other color types return the file's own channel count at
     its own depth — sub-byte greyscale comes back RAW (0..2^d-1,
-    unscaled)."""
+    unscaled).  A grey/RGB tRNS is length-checked and ignored."""
     if payload[:8] != PNG_MAGIC:
         raise ValueError("not a PNG: bad signature")
     pos = 8
@@ -322,14 +323,18 @@ def png_decode(payload: bytes) -> np.ndarray:
         elif tag == b"PLTE":
             plte = np.frombuffer(body, np.uint8).reshape(-1, 3)
         elif tag == b"tRNS":
-            if color != 3:
-                # for grey/RGB the chunk holds 16-bit sample values, a
-                # different layout than the palette alpha bytes below —
-                # a documented seam, not a silent drop (PNG 11.3.2)
-                raise NotImplementedError(
-                    f"png_decode: tRNS for color type {color}"
-                )
-            trns = np.frombuffer(body, np.uint8)
+            if color == 3:
+                trns = np.frombuffer(body, np.uint8)
+            elif color in _TRNS_LEN:
+                # grey/RGB: one 16-bit transparent sample per channel
+                # (PNG 11.3.2); checked, then ignored — the output stays
+                # the file's own grey/RGB channels
+                if length != _TRNS_LEN[color]:
+                    raise ValueError(
+                        f"PNG: tRNS of {length} bytes for color type {color}"
+                    )
+            else:  # grey+alpha / RGBA carry alpha already; tRNS forbidden
+                raise ValueError(f"PNG: tRNS not allowed for color type {color}")
         elif tag == b"IDAT":
             idat.extend(body)
         elif tag == b"IEND":

@@ -87,32 +87,88 @@ class ElectraConfig:
 DEFAULT_CONFIG = ElectraConfig()
 
 
-def _erf(x: np.ndarray) -> np.ndarray:
-    """Vectorized erf, Abramowitz & Stegun 7.1.26 (|err| <= 1.5e-7)."""
+def _erf_(x: np.ndarray) -> np.ndarray:
+    """Vectorized erf, Abramowitz & Stegun 7.1.26 (|err| <= 1.5e-7).
+    ``x`` is the scratch buffer of the exp term and is overwritten."""
     sign = np.sign(x)
-    x = np.abs(x)
-    t = 1.0 / (1.0 + 0.3275911 * x)
-    poly = t * (
-        0.254829592
-        + t * (-0.284496736 + t * (1.421413741 + t * (-1.453152027 + t * 1.061405429)))
-    )
-    return sign * (1.0 - poly * np.exp(-x * x))
+    np.abs(x, out=x)
+    t = x * 0.3275911
+    t += 1.0
+    np.divide(1.0, t, out=t)
+    poly = t * 1.061405429
+    for c in (-1.453152027, 1.421413741, -0.284496736, 0.254829592):
+        poly += c
+        poly *= t
+    # exp(-x * x): negation is exact, so (-x) * x == -(x * x)
+    np.multiply(x, x, out=x)
+    np.negative(x, out=x)
+    np.exp(x, out=x)
+    poly *= x
+    np.subtract(1.0, poly, out=poly)
+    poly *= sign
+    return poly
+
+
+# elements per GELU block: a 256 KB float32 block and its erf temporaries
+# stay in cache instead of streaming each of ~15 passes through memory.  A
+# multiple of the widest SIMD width, so every block but the last has no
+# scalar tail and the last has the same tail as the unblocked array
+_GELU_BLOCK = 1 << 16
+
+
+def _gelu_(x: np.ndarray) -> np.ndarray:
+    """transformers.activations.gelu in the buffer of the C-contiguous
+    ``x``, one block of elements at a time."""
+    flat = x.reshape(-1)
+    for lo in range(0, flat.size, _GELU_BLOCK):
+        blk = flat[lo : lo + _GELU_BLOCK]
+        erf = _erf_(blk / np.sqrt(2.0))
+        erf += 1.0
+        blk *= 0.5
+        blk *= erf
+    return flat.reshape(x.shape)
+
+
+def _layer_norm_(x: np.ndarray, w: np.ndarray, b: np.ndarray, eps: float) -> np.ndarray:
+    """LayerNorm over the last axis in ``x``'s own buffer."""
+    mu = x.mean(axis=-1, keepdims=True)
+    var = x.var(axis=-1, keepdims=True)
+    x -= mu
+    var += eps
+    x /= np.sqrt(var, out=var)
+    x *= w
+    x += b
+    return x
+
+
+def _softmax_(x: np.ndarray) -> np.ndarray:
+    """Softmax over the last axis in ``x``'s own buffer."""
+    x -= x.max(axis=-1, keepdims=True)
+    np.exp(x, out=x)
+    x /= x.sum(axis=-1, keepdims=True)
+    return x
+
+
+def _float_copy(x: np.ndarray) -> np.ndarray:
+    """A fresh array of the dtype ``x * 0.5`` would have."""
+    return np.array(x, dtype=np.result_type(x, 0.5))
+
+
+def _erf(x: np.ndarray) -> np.ndarray:
+    return _erf_(_float_copy(x))
 
 
 def gelu(x: np.ndarray) -> np.ndarray:
     """transformers.activations.gelu: x * 0.5 * (1 + erf(x / sqrt 2))."""
-    return x * 0.5 * (1.0 + _erf(x / np.sqrt(2.0)))
+    return _gelu_(_float_copy(x))
 
 
 def layer_norm(x: np.ndarray, w: np.ndarray, b: np.ndarray, eps: float) -> np.ndarray:
-    mu = x.mean(axis=-1, keepdims=True)
-    var = x.var(axis=-1, keepdims=True)
-    return (x - mu) / np.sqrt(var + eps) * w + b
+    return _layer_norm_(_float_copy(x), w, b, eps)
 
 
 def softmax(x: np.ndarray) -> np.ndarray:
-    e = np.exp(x - x.max(axis=-1, keepdims=True))
-    return e / e.sum(axis=-1, keepdims=True)
+    return _softmax_(_float_copy(x))
 
 
 class ElectraWeights:
@@ -259,40 +315,49 @@ def encoder_forward(
     if attention_mask is None:
         attention_mask = np.ones((B, T), np.float32)
 
-    h = (
-        p["emb.word"][input_ids]
-        + p["emb.pos"][np.arange(T)][None, :, :]
-        + p["emb.type"][0][None, None, :]
-    )
-    h = layer_norm(h, p["emb.ln.w"], p["emb.ln.b"], c.layer_norm_eps)
+    # every elementwise step below runs in place on the layer's own
+    # temporaries, with the same operations in the same order as the
+    # out-of-place expressions (frozen in tests/reference_ports/
+    # electra_encoder_port.py), so the output is bit-identical to them
+    h = p["emb.word"][input_ids]
+    h += p["emb.pos"][:T]
+    h += p["emb.type"][0]
+    _layer_norm_(h, p["emb.ln.w"], p["emb.ln.b"], c.layer_norm_eps)
     if "proj.w" in p:
-        h = h @ p["proj.w"] + p["proj.b"]
+        h = h @ p["proj.w"]
+        h += p["proj.b"]
 
     # get_extended_attention_mask: (1 - m) * -10000, broadcast over heads
     ext = ((1.0 - attention_mask.astype(np.float32)) * -10000.0)[:, None, None, :]
 
     nh = c.num_attention_heads
     dh = c.hidden_size // nh
+    scale = np.sqrt(dh)
+
+    def dense(x, name):  # x @ W + b
+        y = x @ p[f"{name}.w"]
+        y += p[f"{name}.b"]
+        return y
 
     def split_heads(x):  # [B,T,H] -> [B,nh,T,dh]
         return x.reshape(B, T, nh, dh).transpose(0, 2, 1, 3)
 
     for i in range(c.num_hidden_layers):
-        q = split_heads(h @ p[f"l{i}.q.w"] + p[f"l{i}.q.b"])
-        k = split_heads(h @ p[f"l{i}.k.w"] + p[f"l{i}.k.b"])
-        v = split_heads(h @ p[f"l{i}.v.w"] + p[f"l{i}.v.b"])
-        scores = q @ k.transpose(0, 1, 3, 2) / np.sqrt(dh) + ext
-        ctx = softmax(scores) @ v  # [B,nh,T,dh]
+        q = split_heads(dense(h, f"l{i}.q"))
+        k = split_heads(dense(h, f"l{i}.k"))
+        v = split_heads(dense(h, f"l{i}.v"))
+        scores = q @ k.transpose(0, 1, 3, 2)
+        scores /= scale
+        scores += ext
+        ctx = _softmax_(scores) @ v  # [B,nh,T,dh]
         ctx = ctx.transpose(0, 2, 1, 3).reshape(B, T, c.hidden_size)
-        attn = layer_norm(
-            ctx @ p[f"l{i}.ao.w"] + p[f"l{i}.ao.b"] + h,
-            p[f"l{i}.aln.w"], p[f"l{i}.aln.b"], c.layer_norm_eps,
-        )
-        inter = gelu(attn @ p[f"l{i}.i.w"] + p[f"l{i}.i.b"])
-        h = layer_norm(
-            inter @ p[f"l{i}.o.w"] + p[f"l{i}.o.b"] + attn,
-            p[f"l{i}.oln.w"], p[f"l{i}.oln.b"], c.layer_norm_eps,
-        )
+        attn = dense(ctx, f"l{i}.ao")
+        attn += h
+        _layer_norm_(attn, p[f"l{i}.aln.w"], p[f"l{i}.aln.b"], c.layer_norm_eps)
+        inter = _gelu_(dense(attn, f"l{i}.i"))
+        h = dense(inter, f"l{i}.o")
+        h += attn
+        _layer_norm_(h, p[f"l{i}.oln.w"], p[f"l{i}.oln.b"], c.layer_norm_eps)
     return h
 
 

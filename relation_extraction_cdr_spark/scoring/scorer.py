@@ -12,8 +12,8 @@ model weights are not shipped with this engine; scoring is pluggable:
   between the two entity spans of the evidence.  This keeps the entire
   distributed plan (batching, masks, span gathers) real while the matrix
   multiply is faked.
-- ``OnnxScorer``: same batch contract, runs an ONNX Runtime session per
-  executor (import-gated; onnxruntime is not installed in this sandbox).
+- ``electra``: the exact reference architecture in numpy
+  (scoring/electra.py) with seeded or converted weights per executor.
 
 Batch shape: Arrow batches via ``mapInPandas``; per-batch numpy span
 gathers (the segment-mean pooling of electra_model.py:618-641 would
@@ -165,15 +165,6 @@ def score_pairs(features: DataFrame, backend: str = "stub") -> DataFrame:
     converted weights via ElectraWeights.load_npz would score with.
     For raw logits as the output (the kernel made load-bearing), see
     ``score_fulltext``."""
-    if backend == "onnx":  # pragma: no cover - not available in sandbox
-        try:
-            import onnxruntime  # noqa: F401
-        except ImportError as e:
-            raise NotImplementedError(
-                "onnxruntime is not installed; export the reference "
-                "entity-pair head (electra_model.py:563-734) to ONNX and "
-                "install onnxruntime to enable this backend"
-            ) from e
     use_electra = backend == "electra"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -213,31 +204,16 @@ def score_fulltext(
     scoring/electra — ONE encoder pass per document scores ALL its
     pairs).
 
-    Batching is EQUAL-LENGTH-GROUPED (electra.length_grouped_batches):
-    documents of the same exact token length share encoder batches of
-    up to ``batch_size``, then pooling and the pair head run per
-    document at the document's OWN shapes ([C, T] pooling GEMM,
-    [n_pairs, 2H] head GEMM).  Under this shape discipline the emitted
-    float values are BIT-IDENTICAL to the one-document-at-a-time path
-    at any ``batch_size`` and any partitioning / Arrow-chunk layout
-    (pinned by tests/test_electra.py::
-    test_score_fulltext_batched_bit_identical) — the batch only widens
-    the encoder GEMMs' row dimension, which never changes a row's
-    result; length padding WOULD (see length_grouped_batches).
+    Batching is ``_doc_pair_logits``'s: the emitted floats are
+    BIT-IDENTICAL to the one-document-at-a-time path at any
+    ``batch_size`` and any partitioning / Arrow-chunk layout (pinned by
+    tests/test_electra.py::test_score_fulltext_batched_bit_identical).
     label_length is each document's own real pair count, so no pad
     pairs are ever computed.  Weights are lazy per executor from
     (config, seed) or the .npz plug point."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .electra import (
-            DEFAULT_CONFIG,
-            encoder_forward,
-            length_grouped_batches,
-            pad_stack,
-            pair_head,
-            pool_pairs_one,
-            resolve_weights,
-        )
+        from .electra import DEFAULT_CONFIG, resolve_weights
 
         w = resolve_weights(config or DEFAULT_CONFIG, seed, npz_path)
         cols = [c.split(" ")[0] for c in FULLSAMPLE_SCHEMA.split(", ")]
@@ -255,65 +231,76 @@ def score_fulltext(
             cms_all = [list(x) for x in pdf["chem_meshes"]]
             dms_all = [list(x) for x in pdf["dis_meshes"]]
             frames: list[pd.DataFrame] = []
-            for sel in length_grouped_batches([len(t) for t in tids], batch_size):
-                ids, att, msk = pad_stack([tids[i] for i in sel], [ems[i] for i in sel])
-                hidden = encoder_forward(w, ids, att)
-                for j, i in enumerate(sel):
-                    ll = len(labels[i])
-                    pooled = pool_pairs_one(hidden[j], msk[j], ccs[i], dcs[i], ll)
-                    logits = pair_head(w, pooled)  # [ll, 2]
-                    cms, dms = cms_all[i], dms_all[i]
-                    # vectorized output assembly: pair order matches the
-                    # reference's generate_code_pairs nesting (chem-major)
-                    margins = logits[:, 1] - logits[:, 0]  # float32, as before
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "url": np.repeat(urls[i], ll),
-                                "chem_mesh": np.repeat(
-                                    np.asarray(cms, object), len(dms)
-                                ),
-                                "dis_mesh": np.tile(np.asarray(dms, object), len(cms)),
-                                "label": labels[i],
-                                "logit_neg": logits[:, 0].astype(np.float64),
-                                "logit_pos": logits[:, 1].astype(np.float64),
-                                "margin": margins.astype(np.float64),
-                            }
-                        )
+            for i, logits in _doc_pair_logits(
+                w, tids, ems, ccs, dcs, [len(x) for x in labels], batch_size
+            ):
+                ll = len(labels[i])
+                cms, dms = cms_all[i], dms_all[i]
+                # vectorized output assembly: pair order matches the
+                # reference's generate_code_pairs nesting (chem-major)
+                margins = logits[:, 1] - logits[:, 0]  # float32, as before
+                frames.append(
+                    pd.DataFrame(
+                        {
+                            "url": np.repeat(urls[i], ll),
+                            "chem_mesh": np.repeat(np.asarray(cms, object), len(dms)),
+                            "dis_mesh": np.tile(np.asarray(dms, object), len(cms)),
+                            "label": labels[i],
+                            "logit_neg": logits[:, 0].astype(np.float64),
+                            "logit_pos": logits[:, 1].astype(np.float64),
+                            "margin": margins.astype(np.float64),
+                        }
                     )
+                )
             yield pd.concat(frames, ignore_index=True) if frames else empty
 
     return fulltext.mapInPandas(run, schema=FULLSAMPLE_SCHEMA)
+
+
+def _doc_pair_logits(w, token_ids, entity_masks, chem_codes, dis_codes, n_pairs, batch_size):
+    """The is_full_sample document-level forward (electra_model.py:
+    711-734) over featurized documents: yields (i, [n_pairs[i], 2]
+    logits) per document i, one encoder pass per document.
+
+    Encoder batches are EQUAL-LENGTH-GROUPED (electra.length_grouped_
+    batches): documents of the same exact token length share batches of
+    up to ``batch_size``, which only widens the encoder GEMMs' row
+    dimension.  Pooling ([C, T] GEMM) and the pair head ([n_pairs, 2H]
+    GEMM) run at the document's OWN shapes.  A document's logits are
+    therefore bit-identical to scoring it alone, whatever documents
+    share its batch or partition; length padding would move them (see
+    length_grouped_batches)."""
+    from .electra import encoder_forward, length_grouped_batches, pad_stack, pair_head, pool_pairs_one
+
+    for sel in length_grouped_batches([len(t) for t in token_ids], batch_size):
+        ids, att, msk = pad_stack([token_ids[i] for i in sel], [entity_masks[i] for i in sel])
+        hidden = encoder_forward(w, ids, att)
+        for j, i in enumerate(sel):
+            pooled = pool_pairs_one(hidden[j], msk[j], chem_codes[i], dis_codes[i], n_pairs[i])
+            yield i, pair_head(w, pooled)
 
 
 def _fullsample_margins(
     fulltext_rows: list[dict], batch_size: int = 8
 ) -> dict[tuple[str, str, str], float]:
     """Run the is_full_sample document-level forward over featurized
-    fulltext rows; returns {(url, chem_mesh, dis_mesh): margin}.  One
-    encoder pass per document scores all its pairs
-    (electra_model.py:711-734)."""
-    from .electra import full_sample_forward
-
-    w = _electra_weights()
+    fulltext rows; returns {(url, chem_mesh, dis_mesh): margin}."""
     out: dict[tuple[str, str, str], float] = {}
-    for lo in range(0, len(fulltext_rows), batch_size):
-        chunk = fulltext_rows[lo : lo + batch_size]
-        ll = max(len(r["labels"]) for r in chunk)
-        logits = full_sample_forward(
-            w,
-            [r["token_ids"] for r in chunk],
-            [r["entity_mask"] for r in chunk],
-            [r["chem_codes"] for r in chunk],
-            [r["dis_codes"] for r in chunk],
-            label_length=ll,
-        )
-        for b, r in enumerate(chunk):
-            k = 0
-            for cm in r["chem_meshes"]:
-                for dm in r["dis_meshes"]:
-                    out[(r["url"], cm, dm)] = float(logits[b, k, 1] - logits[b, k, 0])
-                    k += 1
+    for i, logits in _doc_pair_logits(
+        _electra_weights(),
+        [r["token_ids"] for r in fulltext_rows],
+        [r["entity_mask"] for r in fulltext_rows],
+        [r["chem_codes"] for r in fulltext_rows],
+        [r["dis_codes"] for r in fulltext_rows],
+        [len(r["labels"]) for r in fulltext_rows],
+        batch_size,
+    ):
+        r = fulltext_rows[i]
+        k = 0
+        for cm in r["chem_meshes"]:
+            for dm in r["dis_meshes"]:
+                out[(r["url"], cm, dm)] = float(logits[k, 1] - logits[k, 0])
+                k += 1
     return out
 
 

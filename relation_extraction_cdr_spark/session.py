@@ -18,7 +18,8 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
 # belt-and-braces for local mode: python workers inherit the JVM's env,
-# which inherits ours — pin BLAS threading before any worker starts
+# which inherits ours — pin BLAS threading before any worker starts (the
+# package __init__ passes OPENBLAS_CORETYPE to the workers the same way)
 for _var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
     os.environ.setdefault(_var, "1")
 

@@ -10,6 +10,7 @@ import pytest
 from relation_extraction_cdr_spark.functions.wordpiece import encode
 from relation_extraction_cdr_spark.refdata import absent_reason, reference_path
 from relation_extraction_cdr_spark.scoring import electra as E
+from tests.reference_ports import electra_encoder_port as F
 from tests.reference_ports import electra_port as P
 
 SMALL = E.ElectraConfig(
@@ -97,6 +98,45 @@ def test_full_forward_parity():
     for r in range(len(ids)):
         _, lref = P.forward_one(w, ids[r], [1] * len(ids[r]), masks[r], chems[r], diss[r])
         assert np.allclose(logits[r], lref, atol=5e-5), f"row {r}: {logits[r]} vs {lref}"
+
+
+@pytest.mark.parametrize(
+    "lens",
+    [[9], [64], [300], [505], [512], [9] * 4, [128] * 4, [512] * 4, [9, 130, 300, 512]],
+    ids=lambda lens: "B{}-T{}{}".format(len(lens), max(lens), "-padded" if len(set(lens)) > 1 else ""),
+)
+def test_encoder_forward_equals_frozen_out_of_place(lens):
+    """The in-place encoder_forward is bit-identical to the frozen
+    out-of-place one (reference_ports/electra_encoder_port.py) at the
+    default 12x256 shape, with and without length padding."""
+    w = E.resolve_weights()
+    rng = np.random.default_rng(len(lens) * 1000 + max(lens))
+    T = max(lens)
+    ids = rng.integers(0, w.config.vocab_size, (len(lens), T))
+    att = (np.arange(T) < np.asarray(lens)[:, None]).astype(np.float32)
+    got = E.encoder_forward(w, ids, att)
+    assert got.dtype == np.float32
+    assert np.array_equal(got, F.encoder_forward(w, ids, att))
+    if len(lens) == 1:  # the default all-ones mask
+        assert np.array_equal(E.encoder_forward(w, ids), F.encoder_forward(w, ids))
+
+
+def test_elementwise_helpers_do_not_mutate():
+    """gelu / softmax / layer_norm return new arrays equal to the frozen
+    out-of-place forms and leave their input alone (train.py reuses the
+    input of gelu); float64 and integer inputs keep their result dtype."""
+    rng = np.random.default_rng(4)
+    x = rng.standard_normal((3, 70_000)).astype(np.float32)  # spans GELU blocks
+    w, b = rng.standard_normal(70_000).astype(np.float32), rng.standard_normal(70_000).astype(np.float32)
+    for arr in (x, x.astype(np.float64), np.arange(-6, 6).reshape(2, 6)):
+        keep = arr.copy()
+        for got, want in ((E.gelu(arr), F.gelu(arr)), (E._erf(arr), F._erf(arr)),
+                          (E.softmax(arr), F.softmax(arr))):
+            assert got.dtype == want.dtype and np.array_equal(got, want)
+        assert np.array_equal(arr, keep)
+    keep = x.copy()
+    assert np.array_equal(E.layer_norm(x, w, b, 1e-12), F.layer_norm(x, w, b, 1e-12))
+    assert np.array_equal(x, keep)
 
 
 def test_padding_invariance():

@@ -60,3 +60,24 @@ def test_literal_marker_page_does_not_kill_the_batch(spark, backend):
         prob = {r[0]: r[6] for r in got}
         assert prob["u/apart"] == stub["u/apart"]
         assert prob["u/ok"] != stub["u/ok"]
+
+
+def test_electra_prob_independent_of_partitioning(spark, fixtures, mesh):
+    """A page's fused electra prob must not depend on which pages share
+    its Arrow batch: the document forward batches equal-length documents
+    only, so padding never moves a real position's hidden state."""
+    pages = fixtures[0]
+    n = pages.count()
+    one_doc_each = spark.createDataFrame(
+        pages.rdd.zipWithIndex().map(lambda r: (r[1], r[0])).partitionBy(n, lambda k: k).values(),
+        pages.schema,
+    )
+    assert one_doc_each.rdd.glom().map(len).collect() == [1] * n
+
+    def probs(p):
+        out = score_candidates(p, mesh, scorer_backend="electra")
+        return sorted((r["url"], r["chem_mesh"], r["dis_mesh"], r["prob"]) for r in out.collect())
+
+    together = probs(pages.repartition(1))
+    assert len(together) > n
+    assert together == probs(one_doc_each)

@@ -213,6 +213,42 @@ def _nested_avi(avi: bytes, depth: int) -> bytes:
     return b"RIFF" + struct.pack("<I", 4 + len(inner)) + b"AVI " + inner
 
 
+def _with_trns(png: bytes, body: bytes) -> bytes:
+    """``png`` with a tRNS chunk carrying ``body`` right after IHDR."""
+    from relation_extraction_cdr_spark.functions.codecs import _chunk
+
+    ihdr_end = 8 + 25  # signature + the 13-byte IHDR chunk
+    return png[:ihdr_end] + _chunk(b"tRNS", body) + png[ihdr_end:]
+
+
+def test_png_grey_rgb_trns_is_checked_and_ignored():
+    """A grey/RGB PNG may carry a tRNS chunk (one 16-bit transparent
+    sample per channel).  The decode ignores it and returns the file's
+    own grey/RGB pixels.  A tRNS of the wrong length, or on a grey+alpha
+    / RGBA file (where the PNG spec forbids it), raises ValueError."""
+    import numpy as np
+
+    from relation_extraction_cdr_spark.functions.codecs import png_decode, png_encode
+
+    rng = np.random.default_rng(11)
+    for ch, n in ((1, 2), (3, 6)):
+        for dtype, top in ((np.uint8, 256), (np.uint16, 65536)):
+            for il in (False, True):
+                px = rng.integers(0, top, (5, 7, ch)).astype(dtype)
+                png = png_encode(px, interlace=il)
+                got = png_decode(_with_trns(png, bytes(range(n))))
+                assert got.dtype == dtype and np.array_equal(got, px)
+                for bad in (n - 1, n + 2):
+                    with pytest.raises(ValueError, match=f"tRNS of {bad} bytes"):
+                        png_decode(_with_trns(png, bytes(bad)))
+    grey2 = png_encode(np.zeros((2, 3, 1), np.uint8), depth=2)
+    assert np.array_equal(png_decode(_with_trns(grey2, bytes(2))), np.zeros((2, 3, 1)))
+    for ch in (2, 4):
+        png = png_encode(rng.integers(0, 256, (3, 4, ch)).astype(np.uint8))
+        with pytest.raises(ValueError, match="tRNS not allowed"):
+            png_decode(_with_trns(png, bytes(2)))
+
+
 def test_avi_deeply_nested_lists_stay_in_contract():
     """A ~30 KB chain of nested LIST chunks used to recurse once per
     level and raise RecursionError, outside DECODE_ERROR_TYPES.  The walk
@@ -299,6 +335,9 @@ def test_codec_fuzz_respects_quarantine_contract():
             ),
             "video",
         ),
+        # grey/RGB PNGs with a (checked, ignored) tRNS chunk
+        "png_grey_trns": (_with_trns(png_encode(px[..., 0]), bytes([0, 9])), "image"),
+        "png_rgb_trns": (_with_trns(png_encode(px), bytes(range(6))), "image"),
     }
     n_run = 0
     for name, (blob, kind) in bases.items():
@@ -960,8 +999,7 @@ class TestCodecs:
         codec's ValueError (never struct.error, and never a misreported
         'bad CRC' on a short final chunk), and tRNS on a grey/RGB file
         — where the chunk holds 16-bit sample values, not palette
-        alphas — raises the documented-seam NotImplementedError instead
-        of being silently dropped."""
+        alphas — is length-checked, then ignored."""
         import struct
         import zlib
 
@@ -988,14 +1026,19 @@ class TestCodecs:
             )
 
         grey = struct.pack(">IIBBBBB", 2, 1, 8, 0, 0, 0, 0)
-        blob = (
-            b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", grey)
-            + chunk(b"tRNS", struct.pack(">H", 99))
-            + chunk(b"IDAT", zlib.compress(bytes([0, 7, 9])))
-            + chunk(b"IEND", b"")
-        )
-        with pytest.raises(NotImplementedError, match="tRNS for color type 0"):
-            png_decode(blob)
+
+        def grey_blob(trns):
+            return (
+                b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", grey)
+                + chunk(b"tRNS", trns)
+                + chunk(b"IDAT", zlib.compress(bytes([0, 7, 9])))
+                + chunk(b"IEND", b"")
+            )
+
+        got = png_decode(grey_blob(struct.pack(">H", 99)))
+        assert got.tolist() == [[[7], [9]]]
+        with pytest.raises(ValueError, match="tRNS of 1 bytes for color type 0"):
+            png_decode(grey_blob(bytes([99])))
 
     def test_avi_audio_stream_strf_ignored(self):
         """An AVI that carries an audio stream alongside the video one
