@@ -112,8 +112,13 @@ def score_candidates(
     # expensive nothing at corpus scale
     gaz, gd, max_words = _mesh_artifacts(mesh_tree, mesh_type_col)
     if persist_intermediates:
+        sc = pages.sparkSession.sparkContext
         while _prev_caches:
-            _prev_caches.pop().unpersist()
+            prev = _prev_caches.pop()
+            # a frame of a stopped (or another) SparkContext took its
+            # cache with it, and calling into it raises: forget it
+            if prev.sparkSession.sparkContext is sc:
+                prev.unpersist()
 
     if fused:
         # doc-level fused path: the document text crosses the shuffle and

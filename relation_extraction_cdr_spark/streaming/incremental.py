@@ -12,6 +12,13 @@ Resume = anti-join pending buckets against the checkpoint — processed
 buckets are never recomputed and the final triple table is byte-identical
 to an uninterrupted run (pytest-verified).
 
+Cost: a processed bucket runs two Spark jobs, its scored write and its
+lineage append (a salt exchange or a gold join adds its own stage jobs to
+the write).  ``url_count`` and ``row_count`` come from Observations on
+the bucket's input and on its scored frame, filled by the write itself
+(no ``count()`` job, no read-back); the lineage row is built in the JVM,
+so the only Python workers are the scoring stage's one pool.
+
 On a real cluster each bucket is itself a distributed job over many
 executors; n_buckets controls restart granularity, not parallelism.
 A Structured Streaming variant (`stream_pages`) expresses the same plan
@@ -22,10 +29,9 @@ idempotent per-batch partition overwrites.
 from __future__ import annotations
 
 import os
-from datetime import datetime
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 CHECKPOINT_SCHEMA = (
     "run_id string, stage string, partition_id int, url_count long, "
@@ -41,22 +47,28 @@ def bucketed(pages: DataFrame, n_buckets: int) -> DataFrame:
 
 def completed_buckets(spark: SparkSession, checkpoint_dir: str, run_id: str, stage: str) -> set[int]:
     """Bucket ids with committed lineage rows.  The not-yet-created case
-    is detected by attempting the read, NOT os.path.exists — the lineage
-    URI is usually remote (hdfs://, s3a://) where a driver-local stat is
-    always False and would silently disable resume on a cluster."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        cp = spark.read.parquet(checkpoint_dir)
-    except AnalysisException:
+    is probed with ``FileSystem.exists`` of the path's own Hadoop
+    filesystem, NOT os.path.exists — the lineage URI is usually remote
+    (hdfs://, s3a://) where a driver-local stat is always False and would
+    silently disable resume on a cluster.  The explicit schema reads a
+    directory that holds no committed file yet (a kill during the first
+    append leaves only ``_temporary``) as empty, and skips the
+    schema-inference job."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(checkpoint_dir)
+    if not path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path):
         return set()
     rows = (
-        cp.where((F.col("run_id") == run_id) & (F.col("stage") == stage))
+        spark.read.schema(CHECKPOINT_SCHEMA).parquet(checkpoint_dir)
+        .where((F.col("run_id") == run_id) & (F.col("stage") == stage))
         .select("partition_id")
-        .distinct()
         .collect()
     )
     return {r["partition_id"] for r in rows}
+
+
+def _observe_count(df: DataFrame) -> tuple[DataFrame, Observation]:
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
 
 
 def run_resumable(
@@ -85,14 +97,18 @@ def run_resumable(
             continue
         if fail_after is not None and processed >= fail_after:
             raise RuntimeError(f"simulated kill after {processed} buckets")
-        part = pages_b.where(F.col("bucket") == b).drop("bucket")
-        url_count = part.count()
-        scored = score_candidates(part, mesh_tree, **pipeline_kwargs)
+        part, urls = _observe_count(pages_b.where(F.col("bucket") == b).drop("bucket"))
+        scored, rows = _observe_count(score_candidates(part, mesh_tree, **pipeline_kwargs))
         scored.write.mode("overwrite").parquet(os.path.join(out_dir, f"bucket={b}"))
-        row_count = spark.read.parquet(os.path.join(out_dir, f"bucket={b}")).count()
-        lineage = spark.createDataFrame(
-            [(run_id, "score", b, url_count, row_count, datetime.now())],
-            CHECKPOINT_SCHEMA,
+        # built in the JVM: a local-list createDataFrame goes through a
+        # Python RDD, which starts a second pool of Python workers
+        lineage = spark.range(1).select(
+            F.lit(run_id).alias("run_id"),
+            F.lit("score").alias("stage"),
+            F.lit(b).cast("int").alias("partition_id"),
+            F.lit(urls.get["n"]).cast("long").alias("url_count"),
+            F.lit(rows.get["n"]).cast("long").alias("row_count"),
+            F.current_timestamp().alias("written_at"),
         )
         lineage.write.mode("append").parquet(checkpoint_dir)
         processed += 1

@@ -2,6 +2,11 @@
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+from pathlib import Path
+
 import pyspark.sql.functions as F
 
 from relation_extraction_cdr_spark.plans.pipeline import (
@@ -135,3 +140,30 @@ def test_pipeline_default_path_survives_null_text(spark, mesh):
     ).withColumn("warc_ts", F.current_timestamp()).withColumn("lang", F.lit("en"))
     triples = materialize_triples(score_candidates(pages, mesh))
     triples.collect()  # must not raise
+
+
+def test_score_candidates_after_session_restart(tmp_path):
+    """A second session in the same process reuses score_candidates after
+    the first one stopped with salted intermediates still cached.  Runs in
+    a subprocess so the session-scoped fixture is left alone."""
+    root = Path(__file__).resolve().parent.parent
+    code = """
+import relation_extraction_cdr_spark
+from relation_extraction_cdr_spark import datagen
+from relation_extraction_cdr_spark.plans.pipeline import score_candidates
+from relation_extraction_cdr_spark.session import spark_session
+
+for _ in range(2):
+    spark = spark_session("restart", master="local[1]")
+    spark.sparkContext.setLogLevel("ERROR")
+    pages, _, _ = datagen.gen_fixture_dfs(spark, 8)
+    print(score_candidates(pages, datagen.mesh_df(spark), salt_partitions=4).count())
+    spark.stop()
+"""
+    env = dict(os.environ, PYTHONPATH=str(root), SPARK_GRAFT_DRIVER_MEM="1g",
+               SPARK_GRAFT_LOCAL_DIR=str(tmp_path))
+    out = subprocess.run([sys.executable, "-c", code], env=env, cwd=root,
+                         capture_output=True, text=True, timeout=300)
+    assert out.returncode == 0, out.stderr[-2000:]
+    counts = out.stdout.split()
+    assert len(counts) == 2 and counts[0] == counts[1], out.stdout
